@@ -39,7 +39,7 @@ def main() -> None:
     # core count this run executes at (master local[$SPARK_GRAFT_CPUS],
     # session.py) — recorded per BENCH_LOCAL row and required to match
     # for bracket membership (VERDICT r14 #6)
-    n_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32))
+    n_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pandas_db_sdk_spark import get_spark
     from pandas_db_sdk_spark.corpus import all_queries

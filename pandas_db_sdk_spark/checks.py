@@ -62,18 +62,28 @@ def attach_checks(df: DataFrame, rules: Mapping[str, Column]):
     """
     from pyspark.sql import Observation
 
-    if not rules:
-        raise ValueError("no rules given")
     obs = Observation()
-    aggs = [
-        F.sum(F.when(cond, 0).otherwise(1)).alias(name) for name, cond in rules.items()
-    ]
-    observed = df.observe(obs, *aggs)
+    observed = df.observe(obs, *_violation_aggs(rules))
 
     def results() -> dict:
         return dict(obs.get)
 
     return observed, results
+
+
+def violation_counts(df: DataFrame, rules: Mapping[str, Column]) -> dict:
+    """{rule: n_violations} in one aggregate over ``df`` — the standalone
+    form of :func:`attach_checks`, for data that is not written by a Spark
+    job (the counters could not ride one)."""
+    return df.agg(*_violation_aggs(rules)).first().asDict()
+
+
+def _violation_aggs(rules: Mapping[str, Column]) -> list:
+    if not rules:
+        raise ValueError("no rules given")
+    return [
+        F.sum(F.when(cond, 0).otherwise(1)).alias(name) for name, cond in rules.items()
+    ]
 
 
 def assert_valid(df: DataFrame, rules: Mapping[str, Column]) -> None:

@@ -4,8 +4,9 @@ The reference (`/root/reference/src/pandas_db_sdk/client.py`) exposes ONE
 class with three methods; a user switching to this engine keeps their code:
 
 * ``DataFrameClient(api_url, auth_token, region)`` (``client.py:45-64``) —
-  here ``api_url`` is the warehouse path (a local dir, or any Hadoop-FS URI
-  on a cluster: ``s3a://…``, ``hdfs://…``). ``auth_token``/``region`` are
+  here ``api_url`` is the warehouse path: a local or mounted directory,
+  since the manifest, its lock and the pandas Arrow path all use the local
+  filesystem (``os.*``, ``fcntl``). ``auth_token``/``region`` are
   accepted and ignored: storage auth is the filesystem's concern now, not a
   bearer header.
 * ``load_dataframe(df, dataframe_name, columns_keys, external_key,
@@ -23,6 +24,17 @@ class with three methods; a user switching to this engine keeps their code:
 
 Everything delegates to :class:`~pandas_db_sdk_spark.engine.DataFrameEngine`
 — this module adds no storage logic, only the reference's exact ergonomics.
+
+Pandas in, pandas out, on the driver: ``load_dataframe`` writes the frame's
+parquet files with pyarrow and ``get_dataframe`` reads the selected
+versions' files back with pyarrow — no Spark job either way, with values
+and dtypes converted by pyspark's own Arrow code, so they are what the
+Spark path stores and ``toPandas`` returns. Spark still runs the store
+when the dataset has constraints (one aggregate over the frame before any
+file is written), when a ``Date`` key is not a date/timestamp column or an
+``ID`` key not an integer column, when Arrow cannot represent the schema,
+and when Arrow is disabled in the session; the Spark exits above always
+read through Spark.
 """
 
 from __future__ import annotations
@@ -46,7 +58,7 @@ class DataFrameClient:
         region: str = "us-east-1",
         spark: Optional[SparkSession] = None,
     ):
-        """``api_url`` → warehouse root (dir path or Hadoop-FS URI).
+        """``api_url`` → warehouse root (a local or mounted directory).
         ``auth_token``, when given, is the caller's identity and selects a
         per-user scope (the reference service isolates each user's datasets
         by their auth identity, reference ``README.md:23-26``); the token is
@@ -99,11 +111,14 @@ class DataFrameClient:
         external_key: Optional[str] = None,
         use_last: bool = False,
     ) -> pd.DataFrame:
-        """Retrieve as pandas (``client.py:139-183``) — Arrow transfer, not
-        a JSON-records body, so dtypes survive (SURVEY §1.3 upgrade)."""
-        return self._engine.load(
+        """Retrieve as pandas (``client.py:139-183``) — Arrow, not a
+        JSON-records body, so dtypes survive (SURVEY §1.3 upgrade). The
+        selected version files are read on the driver, with no Spark job;
+        values and dtypes are those ``get_dataframe_spark(...).toPandas()``
+        returns."""
+        return self._engine.read_pandas(
             dataframe_name, external_key=external_key, use_last=use_last
-        ).toPandas()
+        )
 
     def get_dataframe_spark(
         self,

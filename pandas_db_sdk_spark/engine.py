@@ -23,11 +23,27 @@ Documented service semantics re-expressed (reference ``README.md``):
 * 100K-row chunking + gzip CSV (``README.md:20-21``) → parquet+snappy with
   ``maxRecordsPerFile`` (columnar, splittable — strictly better at scale).
 
-Scale posture: data files are written/read only by Spark tasks (never the
-driver); the manifest holds *metadata only* (names, versions, schemas), so
-it stays KB-sized even when the data is 100 TB. Version/partition filters
-become partition-pruning predicates, so ``load`` of one version touches
-only that version's files.
+Scale posture: Spark DataFrames are written and read only by Spark tasks;
+the manifest holds *metadata only* (names, versions, schemas), so it stays
+KB-sized even when the data is 100 TB. Reads list only the selected
+versions' directories and filter on the version partition column, so a
+``load`` of one version touches only that version's files.
+
+Pandas frames take a driver-local Arrow path (``_arrowio``): a frame that
+already sits in driver memory is written by ``save`` straight to the
+version's parquet files with ``pyarrow``, and ``read_pandas`` (behind
+``DataFrameClient.get_dataframe``) reads the selected versions' files back
+the same way — no Spark job, and no file created through Hadoop's local
+filesystem (without libhadoop, each create or mkdir forks a ``chmod``).
+Values, dtypes and the partition-directory names are Spark's: the path
+runs pyspark's own Arrow conversions. Spark still runs for such a save
+when the dataset has constraints or the call has expectations (one
+aggregate over the frame, before any file is written), when a Date key is
+not a date/timestamp or an ID key not an integer, when Arrow cannot
+represent the schema, and when Arrow is disabled in the session. The
+manifest, its lock and the version directories are local-filesystem
+already (``os.*``, ``fcntl``), so the warehouse is a local (or mounted)
+path either way.
 """
 
 from __future__ import annotations
@@ -35,6 +51,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -45,11 +62,16 @@ try:
 except ImportError:  # non-POSIX: degrade to unlocked (single-writer) mode
     fcntl = None
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
 from ._localrel import local_rows_df
 
 VERSION_COL = "__version"
+# version labels a Hadoop glob alternation can carry verbatim
+_GLOB_SAFE = re.compile(r"[A-Za-z0-9._-]+")
 KEY_TYPES = ("Date", "ID")
 DEFAULT_ID_BUCKET_WIDTH = 1000
 
@@ -189,22 +211,31 @@ class DataFrameEngine:
         deleted and ``DataQualityError`` raises BEFORE the manifest
         commit, so a failed save is invisible to readers (same
         crash-consistency story as an aborted write). NULL counts as a
-        violation — an unevaluable expectation is not a pass.
+        violation — an unevaluable expectation is not a pass. A pandas
+        frame written by the driver-local Arrow path has no write job to
+        ride: its rules run as one Spark aggregate before any file is
+        written.
         """
-        try:
-            import pandas as pd
+        # The reference's contract takes a pandas frame directly
+        # (client.py:99). One already in driver memory is written by the
+        # driver itself through Arrow (_arrowio: no Spark job, no Hadoop-FS
+        # file creation); one that path cannot store exactly as Spark would
+        # is ingested with createDataFrame — the distributed upgrade of the
+        # reference's JSON-records wire (client.py:114).
+        local = None
+        if isinstance(df, pd.DataFrame):
+            # imported on first use: Python UDF workers import this package
+            # too, and loading pyarrow.dataset/parquet slowed every fresh one
+            from ._arrowio import LocalFrame
 
-            if isinstance(df, pd.DataFrame):
-                # The reference's contract takes a pandas frame directly
-                # (client.py:99); ingest via Arrow — the distributed upgrade
-                # of its JSON-records wire (client.py:114).
+            local = LocalFrame.from_pandas(self.spark, df)
+            if local is None:
                 df = self.spark.createDataFrame(df)
-        except ImportError:
-            pass
-        if not isinstance(df, DataFrame):
+        if local is None and not isinstance(df, DataFrame):
             raise TypeError("df must be a pyspark.sql.DataFrame or pandas.DataFrame")
         if not dataframe_name or not isinstance(dataframe_name, str):
             raise ValueError("dataframe_name must be a non-empty string")
+        schema = local.schema if local is not None else df.schema
         columns_keys = dict(columns_keys or {})
         # A dataset's physical layout is fixed at creation (the reference's
         # storage dirs imply the same, README.md:189-218): appends inherit the
@@ -222,8 +253,14 @@ class DataFrameEngine:
         for col, key_type in columns_keys.items():
             if key_type not in KEY_TYPES:
                 raise ValueError(f"key type for {col!r} must be one of {KEY_TYPES}")
-            if col not in df.columns:
+            if col not in schema.names:
                 raise ValueError(f"partition column {col!r} not in DataFrame")
+        partitions = None
+        if local is not None:
+            partitions = local.partitions(columns_keys, self.id_bucket_width)
+            if partitions is None:  # a key type only Spark derives dirs for
+                df, local = self.spark.createDataFrame(local.pdf), None
+                schema = df.schema
 
         # Appends follow the manifest's path (compact() relocates datasets);
         # only a brand-new dataset gets a freshly derived directory.
@@ -257,7 +294,7 @@ class DataFrameEngine:
         else:
             version = external_key
 
-        out, partition_cols = self._derive_partition_cols(df, columns_keys)
+        partition_cols = [f"__p_{col}" for col in columns_keys]
         # Each version writes into its OWN `__version=<v>/` directory
         # (version is the OUTERMOST partition level). This is what makes
         # concurrent save() calls safe: the Hadoop committer stages under
@@ -297,34 +334,48 @@ class DataFrameEngine:
         # rule wins for this save only)
         if existing is not None and existing.get("constraints"):
             expectations = {**existing["constraints"], **(expectations or {})}
-        results = None
-        if expectations:
-            from .checks import attach_checks
+        rules = {
+            name: (F.expr(cond) if isinstance(cond, str) else cond)
+            for name, cond in (expectations or {}).items()
+        }
+        footers = None
+        if local is not None:
+            failing = {}
+            if rules:
+                # one aggregate over the frame, before any file is written
+                from .checks import violation_counts
 
-            rules = {
-                name: (F.expr(cond) if isinstance(cond, str) else cond)
-                for name, cond in expectations.items()
-            }
-            out, results = attach_checks(out, rules)
-        (
-            out.write.mode("append")
-            .option("maxRecordsPerFile", 100_000)  # chunking analogue, README.md:21
-            .partitionBy(*partition_cols)
-            .parquet(write_dir)
-        )
-        if results is not None:
-            failing = {k: v for k, v in results().items() if v}
-            if failing:
-                # abort BEFORE the manifest commit: readers never saw the
-                # staged files (an uncommitted version dir, or the hidden
-                # stage dir of a committed-label overwrite — whose old
-                # tree stays intact), so deleting them is the same
-                # cleanup fsck would do for any crashed write
-                shutil.rmtree(write_dir, ignore_errors=True)
-                raise DataQualityError(
-                    "save aborted, expectations violated: "
-                    + ", ".join(f"{k} ({v} rows)" for k, v in sorted(failing.items()))
+                checked, _ = self._derive_partition_cols(
+                    self.spark.createDataFrame(local.pdf, schema), columns_keys
                 )
+                failing = {k: v for k, v in violation_counts(checked, rules).items() if v}
+            if not failing:
+                footers = local.write(write_dir, partitions)
+        else:
+            out, _ = self._derive_partition_cols(df, columns_keys)
+            results = None
+            if rules:
+                from .checks import attach_checks
+
+                out, results = attach_checks(out, rules)
+            (
+                out.write.mode("append")
+                .option("maxRecordsPerFile", 100_000)  # chunking analogue, README.md:21
+                .partitionBy(*partition_cols)
+                .parquet(write_dir)
+            )
+            failing = {k: v for k, v in results().items() if v} if results else {}
+        if failing:
+            # abort BEFORE the manifest commit: readers never saw the
+            # staged files (an uncommitted version dir, or the hidden
+            # stage dir of a committed-label overwrite — whose old tree
+            # stays intact), so deleting them is the same cleanup fsck
+            # would do for any crashed write
+            shutil.rmtree(write_dir, ignore_errors=True)
+            raise DataQualityError(
+                "save aborted, expectations violated: "
+                + ", ".join(f"{k} ({v} rows)" for k, v in sorted(failing.items()))
+            )
         if write_dir is not version_dir:
             # Committed-label overwrite passed all gates: swap the staged
             # tree in. os.rename cannot replace a non-empty dir, so the
@@ -351,7 +402,7 @@ class DataFrameEngine:
         # a failure here must never fail the save (same policy as
         # provenance); load_pruned treats missing stats as "read the file".
         try:
-            self._collect_file_stats(version_dir)
+            self._collect_file_stats(version_dir, footers)
         except Exception:
             pass
 
@@ -359,19 +410,21 @@ class DataFrameEngine:
         # files feeding the plan (metadata-only; empty for synthesized
         # frames) and the canonicalized-plan fingerprint. Capped at 20
         # sample paths so a 100k-file input can't bloat the manifest.
-        try:
-            # both calls need the JVM DataFrame handle — absent under
-            # Spark Connect; a metadata-only feature must never fail the
-            # save, so the whole capture degrades to nulls together
-            in_files = df.inputFiles()
-            plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-        except Exception:
-            in_files, plan_hash = [], None
+        in_files, plan_hash = [], None  # a driver-local frame has no plan
+        if local is None:
+            try:
+                # both calls need the JVM DataFrame handle — absent under
+                # Spark Connect; a metadata-only feature must never fail
+                # the save, so the whole capture degrades to nulls together
+                in_files = df.inputFiles()
+                plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
+            except Exception:
+                in_files, plan_hash = [], None
         provenance = {
             "n_input_files": len(in_files),
             "input_sample": sorted(in_files)[:20],
             "plan_hash": plan_hash,
-            "schema_cols": sorted(df.columns),
+            "schema_cols": sorted(schema.names),
         }
 
         with self._manifest_lock():
@@ -382,7 +435,7 @@ class DataFrameEngine:
                     "path": path,
                     "columns_keys": columns_keys,
                     "versions": [],
-                    "schema": df.schema.json(),
+                    "schema": schema.json(),
                 },
             )
             if ds["columns_keys"] != columns_keys and ds["versions"]:
@@ -393,7 +446,7 @@ class DataFrameEngine:
                     f"partition keys {ds['columns_keys']}; cannot commit {columns_keys}"
                 )
             ds["columns_keys"] = columns_keys
-            ds["schema"] = self._merge_schema(ds["schema"], df.schema).json()
+            ds["schema"] = self._merge_schema(ds["schema"], schema).json()
             if version not in ds["versions"]:
                 ds["versions"].append(version)
             ds.setdefault("provenance", {})[str(version)] = provenance
@@ -492,9 +545,7 @@ class DataFrameEngine:
         form); a view may reference dataset views and previously defined
         views. The name must be a valid SQL identifier and not collide
         with a dataset's view name."""
-        import re as _re
-
-        if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", view_name or ""):
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", view_name or ""):
             raise ValueError("view_name must be a SQL identifier")
         if not view_sql or not isinstance(view_sql, str):
             raise ValueError("view_sql must be a non-empty SQL string")
@@ -718,8 +769,9 @@ class DataFrameEngine:
         """Retrieve a dataset, optionally pinned to one version.
 
         Version selection mirrors ``get_dataframe`` params
-        (``client.py:160-165``); the filter lands on a partition column so
-        Catalyst prunes to that version's files only.
+        (``client.py:160-165``): only the selected versions' directories
+        are listed, and the version filter on the partition column keeps
+        reads read-committed.
 
         ``as_of=<epoch millis>``: time travel over 'NOW'-stamped versions —
         loads the newest version whose stamp is <= the given instant (the
@@ -727,32 +779,34 @@ class DataFrameEngine:
         the reference's server-side timestamps, ``README.md:81-83``).
         """
         ds = self._dataset_entry(dataframe_name)
-        df = self.spark.read.schema(self._full_schema(ds)).parquet(ds["path"])
-        if as_of is not None:
-            stamped = [v for v in ds["versions"] if str(v).isdigit() and int(v) <= as_of]
-            if not stamped:
-                raise DatasetNotFound(
-                    f"{dataframe_name!r} has no 'NOW'-stamped version at or before {as_of}"
-                )
-            external_key = max(stamped, key=int)
-        elif use_last:
-            external_key = ds.get("latest")
-        if external_key is not None:
-            df = df.filter(F.col(VERSION_COL) == F.lit(str(external_key)))
-        else:
-            # read-committed: only manifest-listed versions are visible, so
-            # files from a save that crashed before its manifest commit (or
-            # pruned by keep_last but not yet deleted) never leak into reads.
-            # Still a partition-column predicate → pruning, not a file scan.
-            df = df.filter(
-                F.col(VERSION_COL).isin([str(v) for v in ds["versions"]])
+        versions = self._select_versions(ds, dataframe_name, external_key, use_last, as_of)
+        schema = self._full_schema(ds)
+        # Only the selected version dirs are listed (not the dataset root),
+        # so planning cost follows the versions read, not the versions kept.
+        present = [
+            v for v, d in zip(versions, self._version_dirs(ds, versions)) if os.path.isdir(d)
+        ]
+        if present:
+            df = (
+                self.spark.read.schema(schema)
+                .option("basePath", ds["path"])
+                .parquet(*self._version_paths(ds, present))
             )
+        else:
+            df = local_rows_df(self.spark, [], schema)
+        # read-committed: only selected versions are visible (without a pin,
+        # the manifest-listed ones), so files from a save that crashed
+        # before its manifest commit (or pruned by keep_last but not yet
+        # deleted) never leak into reads. A partition-column predicate.
+        df = df.filter(F.col(VERSION_COL).isin(versions))
         if drop_internal:
             internal = [c for c in df.columns if c.startswith("__p_") or c == VERSION_COL]
             df = df.drop(*internal)
         return df
 
-    def _collect_file_stats(self, version_dir: str, max_files: int = 4096) -> None:
+    def _collect_file_stats(
+        self, version_dir: str, footers: Optional[Dict[str, Any]] = None, max_files: int = 4096
+    ) -> None:
         """Write one version directory's data-skipping sidecar
         (``.stats.json``, dot-prefixed so Spark partition discovery and
         ``_versions_on_disk`` never see it): per data file, each leaf
@@ -763,19 +817,24 @@ class DataFrameEngine:
         degrades to reading it fully; at that file count the answer is
         ``compact()``, which re-collects). Columns missing stats in ANY
         row group (or with non-orderable/JSON-unsafe types) are omitted
-        for that file, which load_pruned treats as "must read"."""
+        for that file, which load_pruned treats as "must read".
+        ``footers`` (relative path → footer) are the ones a driver-local
+        write already holds; without them every footer is read back."""
         import pyarrow.parquet as pq
 
-        files = []
-        for dp, _, fns in os.walk(version_dir):
-            for fn in fns:
-                if fn.endswith(".parquet") and not fn.startswith((".", "_")):
-                    files.append(os.path.join(dp, fn))
-        if not files or len(files) > max_files:
+        if footers is None:
+            footers = {}
+            for dp, _, fns in os.walk(version_dir):
+                for fn in fns:
+                    if fn.endswith(".parquet") and not fn.startswith((".", "_")):
+                        f = os.path.join(dp, fn)
+                        footers[os.path.relpath(f, version_dir)] = f
+        if not footers or len(footers) > max_files:
             return
         out: Dict[str, Any] = {}
-        for f in files:
-            md = pq.ParquetFile(f).metadata
+        for rel, md in footers.items():
+            if isinstance(md, str):
+                md = pq.ParquetFile(md).metadata
             per: Dict[str, Any] = {}
             bad = set()
             for rg in range(md.num_row_groups):
@@ -802,7 +861,7 @@ class DataFrameEngine:
                         per[name] = [min(per[name][0], mn), max(per[name][1], mx)]
                     else:
                         per[name] = [mn, mx]
-            out[os.path.relpath(f, version_dir)] = per
+            out[rel] = per
         tmp = os.path.join(version_dir, f".stats.{uuid.uuid4().hex[:8]}.tmp")
         with open(tmp, "w") as fh:
             json.dump({"files": out}, fh)
@@ -829,16 +888,9 @@ class DataFrameEngine:
         files simply don't appear in an old sidecar), and the exact
         predicate is re-applied to the surviving rows."""
         ds = self._dataset_entry(dataframe_name)
-        if use_last:
-            external_key = ds.get("latest")
-        versions = (
-            [str(external_key)]
-            if external_key is not None
-            else [str(v) for v in ds["versions"]]
-        )
+        versions = self._select_versions(ds, dataframe_name, external_key, use_last)
         keep: list = []
-        for v in versions:
-            vdir = os.path.join(ds["path"], f"{VERSION_COL}={v}")
+        for vdir in self._version_dirs(ds, versions):
             stats = {}
             try:
                 with open(os.path.join(vdir, ".stats.json")) as fh:
@@ -876,6 +928,29 @@ class DataFrameEngine:
             ]
             df = df.drop(*internal)
         return df
+
+    def read_pandas(
+        self,
+        dataframe_name: str,
+        external_key: Optional[str] = None,
+        use_last: bool = False,
+        as_of: Optional[int] = None,
+    ) -> pd.DataFrame:
+        """``load(...).toPandas()`` without a Spark job: the selected
+        versions' files are read on the driver with ``pyarrow.dataset`` and
+        converted to pandas by pyspark's own ``toPandas`` converters, so
+        values and dtypes are Spark's. Where that read cannot stand in for
+        Spark's (Arrow disabled in the session, a schema Arrow cannot
+        represent) the Spark load runs instead."""
+        from ._arrowio import data_files, read_files
+
+        ds = self._dataset_entry(dataframe_name)
+        versions = self._select_versions(ds, dataframe_name, external_key, use_last, as_of)
+        files = [f for d in self._version_dirs(ds, versions) for f in data_files(d)]
+        out = read_files(self.spark, files, T.StructType.fromJson(json.loads(ds["schema"])))
+        if out is None:
+            out = self.load(dataframe_name, external_key, use_last, as_of=as_of).toPandas()
+        return out
 
     def load_pandas(
         self,
@@ -1769,8 +1844,6 @@ class DataFrameEngine:
                         pass  # idempotent re-merge after a crash
                     except OSError:
                         shutil.copy2(s, d)
-        from pyspark.sql import types as T
-
         with self._manifest_lock():
             manifest = self._read_manifest()
             entry = manifest["datasets"].get(into_name)
@@ -1833,8 +1906,6 @@ class DataFrameEngine:
         """
         if not principal or not isinstance(principal, str):
             raise ValueError("principal must be a non-empty string")
-        import re
-
         safe = re.sub(r"[^A-Za-z0-9._-]", "_", principal)
         return DataFrameEngine(
             self.spark,
@@ -2076,8 +2147,6 @@ class DataFrameEngine:
         column is a hard error (silent coercion corrupts data at scale);
         a new column is fine — old files simply lack it and read as NULL.
         """
-        from pyspark.sql import types as T
-
         merged = T.StructType.fromJson(json.loads(stored_json))
         have = {f.name: f for f in merged.fields}
         for f in new_schema.fields:
@@ -2099,13 +2168,50 @@ class DataFrameEngine:
         Partition columns are pinned to string so numeric-looking version
         labels or date dirs never get re-inferred as longs.
         """
-        from pyspark.sql import types as T
-
         full = T.StructType.fromJson(json.loads(ds["schema"]))
         for col in ds["columns_keys"]:
             full = full.add(f"__p_{col}", T.StringType(), True)
         full = full.add(VERSION_COL, T.StringType(), True)
         return full
+
+    @staticmethod
+    def _select_versions(
+        ds: Dict[str, Any],
+        dataframe_name: str,
+        external_key: Optional[str] = None,
+        use_last: bool = False,
+        as_of: Optional[int] = None,
+    ) -> list:
+        """The version labels a read selects: the newest 'NOW' stamp at or
+        before ``as_of``, else the latest (``use_last``), else the pinned
+        ``external_key``, else every committed version."""
+        if as_of is not None:
+            stamped = [v for v in ds["versions"] if str(v).isdigit() and int(v) <= as_of]
+            if not stamped:
+                raise DatasetNotFound(
+                    f"{dataframe_name!r} has no 'NOW'-stamped version at or before {as_of}"
+                )
+            external_key = max(stamped, key=int)
+        elif use_last:
+            external_key = ds.get("latest")
+        if external_key is not None:
+            return [str(external_key)]
+        return [str(v) for v in ds["versions"]]
+
+    @staticmethod
+    def _version_dirs(ds: Dict[str, Any], versions) -> list:
+        return [os.path.join(ds["path"], f"{VERSION_COL}={v}") for v in versions]
+
+    @classmethod
+    def _version_paths(cls, ds: Dict[str, Any], versions) -> list:
+        """Reader paths for ``versions``' dirs: one ``{a,b,…}`` glob when
+        every label is glob-safe. Spark checks each explicit path on its
+        own thread, so N paths plan slower than one glob (or the whole
+        root) — measured 57 vs 47 ms at 8 versions, 175 vs 124 ms at 24;
+        the glob lists only the selected dirs at the root's cost."""
+        if len(versions) > 1 and all(_GLOB_SAFE.fullmatch(v) for v in versions):
+            return [os.path.join(ds["path"], f"{VERSION_COL}={{{','.join(versions)}}}")]
+        return cls._version_dirs(ds, versions)
 
     def _dataset_entry(self, name: str) -> Dict[str, Any]:
         manifest = self._read_manifest()
@@ -2144,5 +2250,6 @@ class DataFrameEngine:
             for d in list(dirnames):
                 if d == target:
                     shutil.rmtree(os.path.join(dirpath, d), ignore_errors=True)
-                    dirnames.remove(d)
+                if d.startswith(f"{VERSION_COL}="):
+                    dirnames.remove(d)  # a version dir never nests another
 

@@ -1582,8 +1582,8 @@ def _jpeg_decode_gray(b):
             s = e & 0xFF
             bpos += cl
             if s:
-                if bpos + s > nbits:
-                    return None
+                if s > 16 or bpos + s > nbits:
+                    return None  # out-of-spec DC size (a corrupt DHT) / past EOF
                 i = bpos >> 3
                 off = bpos & 7
                 w24 = (sbuf[i] << 16) | (sbuf[i + 1] << 8) | sbuf[i + 2]

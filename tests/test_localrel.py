@@ -52,17 +52,26 @@ def test_sql_literal_roundtrip(spark):
 
 
 def test_require_unicode_literals_rejects_legacy_conf(spark):
-    from pandas_db_sdk_spark import _localrel
-
     key = "spark.sql.parser.escapedStringLiterals"
     old = spark.conf.get(key, "false")
-    app = spark.sparkContext.applicationId
     try:
         spark.conf.set(key, "true")
-        _localrel._UNICODE_LITERALS_OK.discard(app)
         with pytest.raises(ValueError, match="escapedStringLiterals"):
             require_unicode_literals(spark)
     finally:
         spark.conf.set(key, old)
-        _localrel._UNICODE_LITERALS_OK.discard(app)
     require_unicode_literals(spark)  # fine again under the default conf
+
+
+def test_require_unicode_literals_sees_a_later_conf_flip(spark):
+    # a guarded call that passed must not approve the session for good:
+    # the conf is runtime-settable and is read again on every call
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key, "false")
+    require_unicode_literals(spark)
+    try:
+        spark.conf.set(key, "true")
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            require_unicode_literals(spark)
+    finally:
+        spark.conf.set(key, old)

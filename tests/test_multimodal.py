@@ -488,6 +488,27 @@ def test_resample_pcm_skips_out_of_scope(spark):
     assert {r.doc_id for r in out} == {1}
 
 
+@pytest.mark.parametrize("dc_size", [18, 24, 30])
+def test_jpeg_corrupt_dc_size_returns_none(dc_size):
+    """A DC Huffman symbol past the 16-bit category range (a corrupt DHT)
+    fails the decode with None at the decoder, like every other
+    malformed-input path, instead of raising on a negative bit shift."""
+    import numpy as np
+
+    from pandas_db_sdk_spark.multimodal import _jpeg_decode_gray, _jpeg_encode_gray
+
+    rng = np.random.RandomState(1)
+    coefs = rng.randint(-30, 31, size=(4, 4, 8, 8)).astype(np.int64)
+    coefs[..., 0, 0] = 4  # first block: DC diff 4 -> category 3
+    blob = bytearray(_jpeg_encode_gray(coefs, np.full((8, 8), 16, dtype=np.int64)))
+    assert _jpeg_decode_gray(bytes(blob)) is not None
+    dht = bytes(blob).find(b"\xff\xc4")  # the DC table comes first
+    syms = dht + 4 + 1 + 16  # marker, length, class/id, 16 counts
+    assert blob[dht + 4] == 0x00 and blob[syms + 3] == 3
+    blob[syms + 3] = dc_size
+    assert _jpeg_decode_gray(bytes(blob)) is None
+
+
 def test_jpeg_color_neutral_chroma_roundtrip_exact(spark):
     """4:2:0 color JPEG with neutral chroma decodes to EXACT R=G=B=Y
     flat blocks — certifying the interleaved MCU order, per-component DC

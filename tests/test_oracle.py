@@ -10,7 +10,9 @@ rows.
 
 from __future__ import annotations
 
+import inspect
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -66,6 +68,37 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+# temp-view registrations in a query's source: the DataFrame methods and
+# SQL CREATE ... TEMP VIEW statements
+_TEMP_VIEW = re.compile(
+    r"""\.create(?:OrReplace)?(?:Global)?TempView\(\s*["']([^"']+)["']"""
+    r"|CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?TEMP(?:ORARY)?\s+VIEW\s+`?(\w+)",
+    re.IGNORECASE,
+)
+
+
+def _temp_views(name: str) -> set:
+    return {
+        m.group(1) or m.group(2)
+        for m in _TEMP_VIEW.finditer(inspect.getsource(QUERIES[name]))
+    }
+
+
+def _shared_temp_views(names) -> dict:
+    """{view: queries} for every temp-view name more than one of ``names``
+    registers. Temp views are session-global, so two such queries running
+    concurrently would read each other's view."""
+    owners: dict = {}
+    for name in names:
+        for view in _temp_views(name):
+            owners.setdefault(view, set()).add(name)
+    return {v: sorted(q) for v, q in owners.items() if len(q) > 1}
+
+
+def test_temp_view_scan_sees_registrations():
+    assert {"docs_for_udtf", "customer_gs"} <= set().union(*map(_temp_views, QUERIES))
+
+
 @pytest.fixture(scope="module")
 def prefetched(spark, request):
     """Every SELECTED query's Spark result, computed CONCURRENTLY up
@@ -84,6 +117,10 @@ def prefetched(spark, request):
         if callspec is not None and "name" in callspec.params:
             wanted.add(callspec.params["name"])
     wanted &= set(QUERIES)
+    shared = _shared_temp_views(sorted(wanted))
+    assert not shared, (
+        f"queries prefetched concurrently register the same temp views: {shared}"
+    )
 
     def compute(name):
         try:
