@@ -18,7 +18,8 @@ Spark's by construction: it runs pyspark's own conversion code.
   keys, ``from_<lo>_to_<hi>`` floor buckets for ID keys,
   ``__HIVE_DEFAULT_PARTITION__`` for NULL — with at most 100K rows per
   file, each file renamed into place once complete.
-* Read: files are listed by Spark's hidden-file rules, read with
+* Read: the caller lists the files (``DataFrameEngine._version_files``,
+  Spark's hidden-file rule); they are read with
   ``pyarrow.dataset`` against the manifest schema (missing columns read as
   NULL, INT96 files as micros), and converted the way ``DataFrame.toPandas``
   converts Arrow batches.
@@ -44,6 +45,8 @@ import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from .engine import id_bucket_label
 
 DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 MAX_ROWS_PER_FILE = 100_000  # the Spark writer's maxRecordsPerFile
@@ -148,7 +151,7 @@ class LocalFrame:
             vals = arr.cast(pa.int64()).fill_null(0).to_numpy()
             lo = np.floor(vals.astype(np.float64) / np.float64(w)).astype(np.int64) * w
             uniq, inv = np.unique(lo[valid], return_inverse=True)
-            labels = [f"from_{int(v)}_to_{int(v) + w}" for v in uniq]
+            labels = [id_bucket_label(int(v), w) for v in uniq]
         codes = np.full(len(valid), len(labels), dtype=np.int64)
         codes[valid] = inv
         return codes, labels + [DEFAULT_PARTITION]
@@ -226,25 +229,6 @@ class LocalFrame:
 
 
 # ------------------------------------------------------------------ read
-
-
-def _hidden(name: str) -> bool:
-    """Spark's file-index filter: ``_x`` (unless a ``k=v`` partition dir)
-    and ``.x`` names are not data."""
-    return (
-        name.startswith(".")
-        or (name.startswith("_") and "=" not in name)
-        or name.endswith("._COPYING_")
-    )
-
-
-def data_files(version_dir: str) -> List[str]:
-    """The files a Spark scan of ``version_dir`` reads, sorted."""
-    out = []
-    for dp, dirs, files in os.walk(version_dir):
-        dirs[:] = sorted(d for d in dirs if not _hidden(d))
-        out += [os.path.join(dp, f) for f in sorted(files) if not _hidden(f)]
-    return out
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:

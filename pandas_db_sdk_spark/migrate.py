@@ -102,9 +102,7 @@ def export_reference_layout(
     col = keys[0]
     pcol = f"__p_{col}"
     df = engine.load(dataframe_name, external_key, use_last, drop_internal=False)
-    data_cols = [
-        c for c in df.columns if not c.startswith("__p_") and c != "__version"
-    ]
+    data_cols = engine._drop_internal(df).columns
     staging = dest.rstrip("/") + f".staging.{uuid.uuid4().hex[:8]}"
     (
         df.select(*data_cols, pcol)

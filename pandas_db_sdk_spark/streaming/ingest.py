@@ -332,16 +332,15 @@ def near_dup_probe(
     """
     from pyspark.sql import functions as F
 
-    from ..engine import VERSION_COL
+    from ..engine import VERSION_COL, id_bucket_label
 
     w = engine.id_bucket_width
     pfx = sorted(
         int(r.band_pfx)
         for r in batch_bands.select("band_pfx").distinct().collect()
     )
-    # mirror of engine._derive_partition_cols' ID-bucket dir naming
-    # (from_<lo>_to_<lo + width>); band_pfx is pre-scaled to the lo value
-    dirs = [f"from_{v}_to_{v + w}" for v in pfx]
+    # band_pfx is pre-scaled to the bucket's lo value
+    dirs = [id_bucket_label(v, w) for v in pfx]
     idx = engine.load(band_name, drop_internal=False)
     if exclude_version is not None:
         idx = idx.filter(F.col(VERSION_COL) != F.lit(exclude_version))
@@ -751,7 +750,7 @@ def stream_lines_dedup_into_engine(
     commit byte-for-byte."""
     from pyspark.sql import functions as F
 
-    from ..engine import VERSION_COL, DatasetNotFound
+    from ..engine import VERSION_COL, DatasetNotFound, id_bucket_label
 
     seen_name = f"{dataframe_name}/__seen_lines"
     w = engine.id_bucket_width
@@ -779,7 +778,7 @@ def stream_lines_dedup_into_engine(
                 int(r.p)
                 for r in lines.select(pfx_col.alias("p")).distinct().collect()
             )
-            dirs = [f"from_{v}_to_{v + w}" for v in pfx]
+            dirs = [id_bucket_label(v, w) for v in pfx]
             seen = (
                 engine.load(seen_name, drop_internal=False)
                 # replay guard: never probe this epoch's own committed

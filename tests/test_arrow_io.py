@@ -275,3 +275,25 @@ def test_pandas_store_and_fetch_start_no_spark_job(spark, tmp_path):
             client.get_dataframe("t", use_last=True),
         ),
     ) == []
+
+
+def test_package_import_leaves_arrow_io_unloaded():
+    """Python UDF workers import the package; loading the Arrow I/O
+    module (and pyarrow.dataset/parquet with it) there slows every fresh
+    worker, so importing the package must not load them."""
+    import subprocess
+    import sys
+
+    code = (
+        "import pandas_db_sdk_spark, sys; "
+        "print(sorted(m for m in ('pandas_db_sdk_spark._arrowio', "
+        "'pyarrow.dataset', 'pyarrow.parquet') if m in sys.modules))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.stdout.strip() == "[]"

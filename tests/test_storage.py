@@ -1214,6 +1214,12 @@ def test_repartition_dataset_changes_layout_and_keeps_versions(spark, tmp_path):
     new_path = eng._dataset_entry("evo")["path"]
     assert any(d.startswith("__p_uid=") for d in os.listdir(
         os.path.join(new_path, "__version=v1")))
+    # the rewrite leaves fresh data-skipping sidecars, so pruning on the
+    # new key opens a strict subset of the files
+    for v in ("v1", "v2"):
+        assert os.path.isfile(os.path.join(new_path, f"__version={v}", ".stats.json"))
+    pruned = eng.load_pruned("evo", "uid", lo=0, hi=5)
+    assert len(pruned.inputFiles()) < len(eng.load("evo").inputFiles())
     # history + content intact
     assert eng.load("evo").count() == 35
     assert eng.load("evo", external_key="v2").count() == 5
@@ -2007,3 +2013,68 @@ def test_schema_history_tracks_adds_and_removes(spark, tmp_path):
     )
     row = eng.schema_history("pds").collect()[0]
     assert row.added == "b,id" and "__p_" not in row.added
+
+
+def test_merge_branch_retry_replaces_truncated_copy(spark, tmp_path):
+    """A merge that fell back to copying and crashed mid-file leaves
+    truncated copies of the branch's version under the target; the retry
+    must replace them (as branch_dataset's retry does), not keep them."""
+    import os
+
+    from pandas_db_sdk_spark.engine import VERSION_COL, DataFrameEngine
+
+    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
+    eng.save(spark.createDataFrame([(1,)], "id long"), "m", external_key="v1")
+    eng.branch_dataset("m", "f")
+    eng.save(spark.createDataFrame([(2,)], "id long"), "f", external_key="v2")
+    src = eng._dataset_entry("f")["path"]
+    dst = eng._dataset_entry("m")["path"]
+    vdir = f"{VERSION_COL}=v2"
+    for root, _dirs, files in os.walk(os.path.join(src, vdir)):
+        rel = os.path.relpath(root, src)
+        os.makedirs(os.path.join(dst, rel), exist_ok=True)
+        for fn in files:
+            with open(os.path.join(root, fn), "rb") as fh:
+                head = fh.read(max(1, os.path.getsize(fh.name) // 2))
+            with open(os.path.join(dst, rel, fn), "wb") as fh:
+                fh.write(head)
+
+    assert eng.merge_branch("f", "m")["merged_versions"] == ["v2"]
+    assert {r.id for r in eng.load("m").collect()} == {1, 2}
+    for root, _dirs, files in os.walk(os.path.join(src, vdir)):
+        rel = os.path.relpath(root, src)
+        for fn in files:
+            assert os.path.getsize(os.path.join(dst, rel, fn)) == \
+                os.path.getsize(os.path.join(root, fn))
+
+
+def test_leftover_hidden_dir_in_committed_version_is_not_data(spark, tmp_path):
+    """A crashed writer's ``_temporary/`` tree inside a committed version
+    dir is hidden by Spark's file rule; every reader and maintenance op
+    lists a version's files by that same rule, so none of them sees it."""
+    import os
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pandas_db_sdk_spark.engine import DataFrameEngine
+
+    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
+    pdf = pd.DataFrame({"k": list(range(0, 1000, 10)), "v": [1.5] * 100})
+    eng.save(pdf, "ds", columns_keys={"k": "ID"}, external_key="v1")
+    eng.branch_dataset("ds", "b")
+    vdir = os.path.join(eng._dataset_entry("ds")["path"], "__version=v1")
+    leftover = os.path.join(
+        vdir, "_temporary", "0", "_temporary", "attempt_1", "__p_k=from_0_to_1000"
+    )
+    os.makedirs(leftover)
+    pq.write_table(
+        pa.table({"k": [5], "v": [99.0]}), os.path.join(leftover, "part-00000.parquet")
+    )
+
+    pruned = eng.load_pruned("ds", "k", lo=100, hi=200)
+    want = eng.load("ds").filter(F.col("k").between(100, 200))
+    assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, want.collect()))
+    assert eng.describe_dataset("ds")["versions"][0]["n_files"] == 1
+    assert eng.diff_branches("b", "ds")["conflicting_labels"] == []
